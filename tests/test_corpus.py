@@ -182,3 +182,40 @@ def test_e5_blocking_bounded_on_hot_shingle(spark):
     assert len(cand) == n_batch  # one candidate per batch doc, not 30*400
     assert len(cand) <= n_batch * E5_PREFIX * E5_DF_CAP
     assert all(c.b_id == c.e_id for c in cand)  # each found its source
+
+
+def test_e6_omits_stages_that_drop_a_whole_source(spark, tmp_path):
+    """A source whose every document fails language id has rows only at
+    the raw stage: like the oracle's GROUP BY, e6 emits no zero-count
+    (stage, source) rows."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from x17a5_spark.queries.corpus import _e6_sql, e6_curation_funnel
+
+    words = "ledger asset cash bond note loan fund rate".split()
+    english = [
+        " ".join(f"the {words[(d + k) % 8]} of a {words[k % 8]}{d} is in that"
+                 for k in range(40))
+        for d in range(6)
+    ]
+    foreign = [" ".join(f"zq{d}x{k} vw{k}" for k in range(60)) for d in range(4)]
+    texts = english + foreign
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array(range(1, len(texts) + 1), pa.int64()),
+            "text": texts,
+            "lang": ["en"] * len(texts),
+            "source": ["web"] * len(english) + ["scan"] * len(foreign),
+            "n_chars": [len(t) for t in texts],
+        }),
+        str(tmp_path / "documents.parquet"),
+    )
+    got = sorted(tuple(r) for r in e6_curation_funnel(spark, str(tmp_path)).collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'")
+    want = sorted(tuple(r) for r in con.execute(_e6_sql()).fetchall())
+    assert ("1_raw", "scan", len(foreign)) in want
+    assert ("6_quota", "web", len(english)) in want
+    assert got == want

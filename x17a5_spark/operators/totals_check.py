@@ -96,9 +96,18 @@ def totals_check_kernel(
     a ``None`` guard) — exactly ``pd.isna`` on the scalar floats these
     lists hold, without the per-call pandas dispatch in the O(m^2)
     lookback loop.
+
+    Each lookback window ``L .. i-1`` is a running sum kept per left
+    endpoint ``L``, extended by a row once that row is known to survive,
+    so the scan is O(m^2) rather than re-summing every window. Each sum
+    is accumulated left to right from int ``0``, as builtin ``sum`` does
+    on CPython < 3.12, so the results are bit-identical to re-summing.
+    A window holds a survivor exactly when ``L`` is at or before the
+    last surviving row; the windows after it are empty and skipped.
     """
     m = len(items)
-    alive = [True] * m
+    keep: list[int] = []
+    sums: list = []  # sums[L]: sum of the surviving non-NaN values in L .. i-1
     total_flag, total_amt = NO_TOTAL, float("nan")
 
     for i in range(m):
@@ -114,28 +123,26 @@ def totals_check_kernel(
             total_flag, total_amt = TOTAL_UNEXPLAINED, item1
 
         item1_na = item1 is None or item1 != item1
-        for j in range(i):
-            window = [
-                values[k]
-                for k in range(i - j - 1, i)
-                if 0 <= k < m and alive[k]
-            ]
-            if not window:
-                continue
-            # pandas .sum() treats NaN as 0 (empty-window handled above)
-            item2 = sum(
-                v for v in window if not (v is None or v != v)
-            )
+        survives = True
+        # shortest non-empty window first; pandas .sum() treats NaN as 0
+        for left in range(keep[-1] if keep else -1, -1, -1):
+            item2 = sums[left]
             check1 = (not item1_na) and item1 == item2
             val, check2 = _is_power_of_ten_or_digit_drop(item1, item2)
             check3 = _is_epsilon_match(item1, item2)
             if check1 or check2 or check3:
-                alive[i] = False
+                survives = False
                 if is_total:
                     total_flag, total_amt = TOTAL_EXPLAINED, val
                 break
 
-    return [k for k in range(m) if alive[k]], total_flag, total_amt
+        sums.append(0)
+        if survives:
+            keep.append(i)
+            if not item1_na:
+                sums = [s + item1 for s in sums]
+
+    return keep, total_flag, total_amt
 
 
 def remove_subtotals(

@@ -868,9 +868,12 @@ def e6_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.struct(F.lit(nm).alias("stage"), F.col(f"n{i}").alias("n_kept"))
         for i, nm in enumerate(names, start=1)
     ]
-    return per_src.select(
-        "source", F.explode(F.array(*entries)).alias("e")
-    ).select("e.stage", "source", "e.n_kept")
+    # a stage that keeps none of a source's rows has no group to emit
+    return (
+        per_src.select("source", F.explode(F.array(*entries)).alias("e"))
+        .select("e.stage", "source", "e.n_kept")
+        .filter(F.col("n_kept") > 0)
+    )
 
 
 def _e6_sql() -> str:

@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "x17a5_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
@@ -36,6 +38,12 @@ def get_spark(app_name: str = "x17a5_spark", shuffle_partitions: int | None = No
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Python workers fork from the engine's daemon (worker_daemon.py),
+        # which pays their import and zip-cache set-up once. The daemon
+        # starts before any task ships the package, so the engine's root
+        # goes on the workers' PYTHONPATH; local[N] runs them on this host.
+        .config("spark.python.daemon.module", "x17a5_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _ENGINE_ROOT)
     )
     # Round-13 optimization round: a long-lived driver running the full
     # registry compiles thousands of whole-stage-codegen classes, and
