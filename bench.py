@@ -20,8 +20,8 @@ driver-side row transfer). First execution of a complex plan pays
 whole-stage-codegen compilation + JVM JIT warmup (measured 3-6x on the
 widest plans), so each query gets one untimed warmup execution and the
 reported figure is the MEDIAN of three timed runs with a per-query
-[min, max] bracket (the round-9 default; SPARK_GRAFT_BENCH_REPEATS
-overrides — 2 restores the pre-r9 best-of-2 contract) — steady-state
+[min, max] bracket (SPARK_GRAFT_BENCH_REPEATS raises the count; 3 is
+the floor) — steady-state
 engine throughput, which is the number that extrapolates to a
 long-running cluster. The cold first-execution total is reported
 separately as ``cold_total_sec`` and keeps one-full-rebuild semantics
@@ -42,6 +42,12 @@ from x17a5_spark.queries import registry
 from x17a5_spark.session import get_spark
 from x17a5_spark.tables import TABLE_NAMES, load_table
 
+# The headline suite, in run order: the registry queries the bench
+# times, including e1_full_pipeline, the end-to-end bronze -> silver
+# -> gold pipeline (timed from scratch, see END_TO_END).
+# g1_pagerank is oracle-checked but left out: its fixed iterations of
+# tiny exchanges measure scheduler latency at bench SF, not engine
+# throughput.
 HEADLINE = [
     "q1_pricing_summary",
     "q3_order_revenue",
@@ -62,30 +68,18 @@ HEADLINE = [
     "s1_cosine_topk",
     "st3_session_window",
     "e3_structured_assets",
-    # round 2 additions: the wide unstructured build and the one-pass
-    # accounting-check chain
     "u6_unstructured_wide",
     "c5_accounting_chain",
-    # round 2 corpus-prep layer: the cleaning composite and the packing
-    # kernel
     "e4_corpus_pipeline",
     "k7_sequence_pack",
-    # round 3 additions: liability-side structured build, watermark-drop
-    # semantics, IVF cell-probe ANN
     "e3l_structured_liabilities",
     "st4_watermark_drop",
     "s3_ivf_probe",
-    # round 3, late additions: range join, salted skew join, bottom-k
-    # sample quantiles, IVF-cell SemDeDup, unigram-LM perplexity filter
     "j9_range_join",
     "j10_salted_skew_join",
     "a17_sample_quantiles",
     "d8_semdedup",
     "t13_perplexity_filter",
-    # round 3, session 3: CDC upsert merge, equi-width histogram, video
-    # frame-sample fan-out (g1 PageRank is oracle-checked but excluded
-    # here: 5 fixed iterations of tiny exchanges measure scheduler
-    # latency at bench SF, not engine throughput)
     "j13_upsert_merge",
     "a18_histogram",
     "m4_frame_sample",
@@ -112,9 +106,6 @@ HEADLINE = [
     "st7_rate_anomaly",
     "w9_rolling_median",
     "e6_curation_funnel",
-    # round 4: the end-to-end docs -> OCR -> clean -> gold pipeline —
-    # the single most reference-comparable number (BASELINE.md's >30 h
-    # envelope for 93,599 filings); SCALE.md converts it to filings/sec
     "e1_full_pipeline",
     "s2_lsh_ann",
     "t22_boilerplate_removal",
@@ -141,42 +132,23 @@ HEADLINE = [
     "m7_audio_frames",
     "j16_fuzzy_name_join",
     "e9_training_manifest",
-    # round 5: closed-form HLL (was rows-only), Count-Min sketch,
-    # compaction planner
     "t19_hll_distinct",
     "t27_countmin",
     "v3_compaction_plan",
-    # round 6: moments quantile sketch (exact-DECIMAL power sums),
-    # bucketed co-located join (zero-exchange fact-fact SMJ)
     "t28_moments_sketch",
     "j17_bucketed_join",
-    # round 7: asymmetric containment near-dup join (prefix-filter
-    # blocked on the contained side, df-capped postings) + paragraph
-    # (sub-document) dedup with reassembly
     "d14_containment_join",
     "d15_paragraph_dedup",
     "e10_leakage_safe_split",
     "t29_ngram_novelty",
     "k11_length_batching",
     "e11_cluster_canonical",
-    # round 8: delimiter-mode paragraph dedup (structural split +
-    # fixed-width chunking of oversized spans only)
     "d16_paragraph_dedup_delim",
-    # round 9: eval-set n-gram decontamination (broadcast semi-join
-    # shape — the corpus gram set never shuffles)
     "t30_decontamination",
-    # round 10: cc_star chained components (the hub-safety claim now
-    # has a measured skew row in SCALE.md, not just a plan argument)
     "d17_cc_star_chain",
-    # round 10: Gopher in-document repetition gate (two hash exchanges,
-    # zero joins — within-doc repeats collapse map-side)
     "t32_repetition_filter",
-    # round 12: the Unicode-fold gate (stateless scalar chain + one
-    # fingerprint window) and paragraph-grain minhash near-dedup
     "t33_unicode_normalize",
     "d18_paragraph_near_dedup",
-    # round 13: the frozen model-based quality gate (codegen scalar
-    # chain; the model is ~70 interpolated integer literals)
     "t34_model_quality_filter",
 ]
 
@@ -184,20 +156,12 @@ HEADLINE = [
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).removeprefix("sf")
-    # variance-bracket protocol (round-7 VERDICT ask #3): the scaled-lake
-    # join/kernel tails vary run-to-run on this VM (d13 14.5-41.0 s
-    # between identical-plan suite samples), so single-sample artifacts
-    # cannot distinguish a regression from noise. SPARK_GRAFT_BENCH_REPEATS=N
-    # (N >= 3) switches the steady-state figure from best-of-2 to
-    # MEDIAN-of-N and records a per-query [min, max] bracket in
-    # BENCH_FULL.json. Round 9 (VERDICT r8 #2): median-of-3 IS the
-    # committed default — the sf0.1 artifact every round-over-round
-    # comparison reads carries brackets too, so single-session noise
-    # (r8's 50.0-vs-56.1 s snapshot/artifact mismatch) can't read as a
-    # regression. SPARK_GRAFT_BENCH_REPEATS=2 restores the old
-    # best-of-2 contract. Regression rule (SCALE.md): flag a query
-    # only when its new median moves >1.5x outside the recorded bracket.
-    repeats = max(2, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
+    # variance-bracket protocol: single-sample artifacts cannot tell a
+    # regression from run-to-run noise, so every query reports the
+    # MEDIAN of N >= 3 timed runs plus a per-query [min, max] bracket in
+    # BENCH_FULL.json. Regression rule (SCALE.md): flag a query only
+    # when its new median moves >1.5x outside the recorded bracket.
+    repeats = max(3, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
     # SPARK_GRAFT_BENCH_ONLY="d15,d16,st8" (short codes or full names):
     # run a targeted slice of the headline suite — the skew-lake and
     # 100x protocols (round 10) measure specific queries without paying
@@ -251,36 +215,15 @@ def main() -> None:
             d.write.mode("overwrite").format("noop").save()
             return time.time() - t0
 
-        if rebuild:
-            # timed end-to-end execution(s) (construction + stage
-            # writes + materialization into a fresh tmpdir); no
-            # warmup/best-of-2 — every run is a full from-scratch
-            # pipeline, and the cold number IS the one comparable to
-            # the reference's >30 h envelope. Under the bracket
-            # protocol the end-to-end pipelines repeat too (e1 was one
-            # of the documented variance offenders), each repeat a
-            # full rebuild.
-            if repeats == 2:
-                timings[name] = round(run(), 3)
-                cold_total += timings[name]
-            else:
-                samples = sorted(run() for _ in range(repeats))
-                timings[name] = round(samples[len(samples) // 2], 3)
-                brackets[name] = [round(samples[0], 3), round(samples[-1], 3)]
-                # cold_total keeps ONE-full-rebuild semantics at any
-                # repeat count (ADVICE r8: sum(samples) scaled with the
-                # protocol and broke comparability to best-of-2
-                # artifacts) — the median rebuild is the representative
-                # sample; the full spread lives in the bracket map
-                cold_total += timings[name]
-        else:
+        # every end-to-end run is a full from-scratch pipeline, so it
+        # gets no warmup, and cold_total counts its median rebuild once
+        if not rebuild:
             cold_total += run()  # warmup: codegen + JIT + stage fill
-            samples = sorted(run() for _ in range(repeats))
-            if repeats == 2:
-                timings[name] = round(samples[0], 3)  # best-of-2 contract
-            else:
-                timings[name] = round(samples[len(samples) // 2], 3)  # median
-                brackets[name] = [round(samples[0], 3), round(samples[-1], 3)]
+        samples = sorted(run() for _ in range(repeats))
+        timings[name] = round(samples[len(samples) // 2], 3)  # median
+        brackets[name] = [round(samples[0], 3), round(samples[-1], 3)]
+        if rebuild:
+            cold_total += timings[name]
         # scoped release first (drops the Python references so the JVM
         # can reclaim the blocks), then the defensive catalog sweep
         release_stage_caches()
@@ -304,14 +247,13 @@ def main() -> None:
         "e2e_pipeline_sec": {k: timings[k] for k in END_TO_END if k in timings},
         "e1_stages": e1_stages,
         "n_queries": len(timings),
-    }
-    if brackets:
-        full["protocol"] = f"median_of_{repeats}"
-        full["bracket"] = brackets
-        full["regression_rule"] = (
+        "protocol": f"median_of_{repeats}",
+        "bracket": brackets,
+        "regression_rule": (
             "flag only if a query's new median moves >1.5x outside the "
             "recorded [min,max] bracket"
-        )
+        ),
+    }
     # a BENCH_ONLY slice must never overwrite the committed full-suite
     # artifact (round 10: a t30-only probe was accidentally committed
     # as BENCH_FULL.json) — slices write to BENCH_SLICE.json. The

@@ -69,6 +69,28 @@ def test_pipeline_idempotent_and_incremental(spark, tmp_path):
     assert row["Cash"] == 2.0 and row["Receivables"] == 5.0
 
 
+def test_rerun_keeps_a_dropped_amendment_out_of_gold(spark, tmp_path):
+    """Gold keeps one row per (cik, fiscal_year): the full build's
+    keep-first dedup drops the amended 2021-09-28 filing, and a re-run
+    over the same corpus must not append it (its filing key is absent
+    from gold, but its gold key is not)."""
+    doc = b"Cash|$ 2\nReceivables|5\nTotal assets|7\nPayables|11"
+    filings = [("101", "2021-03-28"), ("101", "2021-09-28"), ("102", "2021-03-28")]
+    docs = spark.createDataFrame(
+        [(c, d, bytearray(doc)) for c, d in filings],
+        "cik string, filing_date string, content binary",
+    )
+    text = spark.createDataFrame(
+        [(c, d, 0, "Statement of Financial Condition") for c, d in filings],
+        "cik string, filing_date string, line_idx int, line_text string",
+    )
+    out = str(tmp_path / "lake")
+    assert run_pipeline(spark, docs, text, out, _label_map(spark), LABELS).count() == 2
+    gold = run_pipeline(spark, docs, text, out, _label_map(spark), LABELS)
+    keys = sorted(tuple(r) for r in gold.select("cik", "fiscal_year").collect())
+    assert keys == [("101", 2020), ("102", 2020)]
+
+
 def test_pipeline_releases_stage_caches_scoped(spark, tmp_path):
     """VERDICT r12 #7: run_pipeline owns its stage-boundary eviction —
     after it returns, the OCR stage cache it registered is gone

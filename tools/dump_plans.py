@@ -2,11 +2,18 @@
 representative slice of the registry, with one-line commentary on the
 shape each plan is expected to keep (enforced by tests/test_plans.py).
 
+With ``--only``, write the FULL formatted explain of the named queries
+instead, one file each at ``<out>/<code>_<suffix>.txt`` — before/after
+plan evidence for an optimization (e.g. plans/r13, plans/r14).
+
 Usage: python tools/dump_plans.py [sf_dir]
+       python tools/dump_plans.py [sf_dir] --only d3,e7 --out plans/r15 --suffix before
+       (codes are the short "d3"/"e7" prefixes or full names)
 """
 
 from __future__ import annotations
 
+import argparse
 import contextlib
 import io
 import os
@@ -141,6 +148,12 @@ def plan_tree(spark, queries, name: str, sf_dir: str) -> str:
     fresh-session plan, independent of what ran before it (the r10
     full-suite flake: test_plan_audit's registry sweep left persisted
     stages that drifted the live skeletons under pytest ordering)."""
+    return explain(spark, queries, name, sf_dir).split("\n\n")[0]
+
+
+def explain(spark, queries, name: str, sf_dir: str) -> str:
+    """The full formatted explain of one registry query, built from a
+    clean cache (see ``plan_tree``)."""
     from x17a5_spark.cache import release_stage_caches
 
     release_stage_caches()
@@ -149,7 +162,7 @@ def plan_tree(spark, queries, name: str, sf_dir: str) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
-    return buf.getvalue().split("\n\n")[0]
+    return buf.getvalue()
 
 
 def node_skeleton(tree: str) -> list[str]:
@@ -190,10 +203,38 @@ def documented_skeletons(plans_md: str) -> dict[str, list[str]]:
     return out
 
 
+def dump_only(spark, queries, sf_dir: str, only: str, out_dir: str, suffix: str) -> None:
+    """Full formatted explains of the ``only`` queries (comma-separated
+    short codes or full names) into ``out_dir/<code>_<suffix>.txt``."""
+    want = {s.strip() for s in only.split(",") if s.strip()}
+    names = [n for n in queries if n in want or n.split("_")[0] in want]
+    missing = want - set(names) - {n.split("_")[0] for n in names}
+    if missing:
+        raise SystemExit(f"unknown queries: {sorted(missing)}")
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        path = os.path.join(out_dir, f"{name.split('_')[0]}_{suffix}.txt")
+        with open(path, "w") as fh:
+            fh.write(f"# {name} @ {sf_dir} — explain('formatted')\n")
+            fh.write(explain(spark, queries, name, sf_dir))
+        print(f"wrote {path}")
+
+
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("--only", help="comma-separated query codes or names")
+    ap.add_argument("--out", help="output directory (with --only)")
+    ap.add_argument("--suffix", help="file-name suffix (with --only)")
+    args = ap.parse_args()
+    if args.only and not (args.out and args.suffix):
+        ap.error("--only needs --out and --suffix")
+    sf_dir = args.sf_dir
     spark = get_spark("plans")
     queries, _ = registry()
+    if args.only:
+        dump_only(spark, queries, sf_dir, args.only, args.out, args.suffix)
+        return
     out = [
         "# PLANS — physical-plan evidence for representative queries",
         "",

@@ -90,18 +90,17 @@ def grouped_kernel(
     kernel at the 20× lake (31.9 s → 14.6 s for 200k groups,
     value-identical output).
 
-    Memory stays bounded at O(Arrow batch + largest group), NOT
-    O(partition): input is sorted by the group key within partitions
-    (local SortExec, no extra exchange), so a group is a contiguous run
-    and only the possibly-incomplete TRAILING group of each Arrow batch
-    is carried into the next. NaN group keys are handled (dropna=False
-    + isna-aware carry detection) to match applyInPandas semantics.
+    Built on ``batched_grouped_kernel``, whose ``batch_fn`` here runs
+    the in-batch pandas groupby, so memory stays bounded at O(Arrow
+    batch + largest group), not O(partition). NaN group keys are
+    handled (dropna=False + isna-aware carry detection) to match
+    applyInPandas semantics.
     """
     import pandas as pd
 
     group_cols = list(group_cols)
 
-    def run(pdf: pd.DataFrame):
+    def batch_fn(pdf: pd.DataFrame):
         outs = []
         for key, g in pdf.groupby(group_cols, sort=False, dropna=False):
             g = g.reset_index(drop=True)
@@ -111,17 +110,9 @@ def grouped_kernel(
                 o = fn(g)
             if o is not None and len(o):
                 outs.append(o)
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
+        return pd.concat(outs, ignore_index=True) if outs else None
 
-    def op(batches):
-        yield from _stream_complete_groups(batches, group_cols, run)
-
-    return (
-        kernel_partitions(df, group_cols)
-        .sortWithinPartitions(*group_cols)
-        .mapInPandas(op, schema=schema)
-    )
+    return batched_grouped_kernel(df, group_cols, batch_fn, schema)
 
 
 def _stream_complete_groups(batches, group_cols: list[str], run):
@@ -163,16 +154,19 @@ def _stream_complete_groups(batches, group_cols: list[str], run):
 def batched_grouped_kernel(
     df: DataFrame, group_cols: list[str], batch_fn, schema: str
 ) -> DataFrame:
-    """Like ``grouped_kernel``, but ``batch_fn`` receives a frame
-    holding MANY complete groups at once (one per Arrow batch, group
-    boundaries guaranteed intact) and returns one output frame (or
-    None). For kernels whose per-group work is tiny — a filing side is
-    ~6-25 rows — the per-group pandas machinery (groupby dispatch,
-    frame slice/copy/concat per group) dominates grouped_kernel's
-    cost; a batch_fn can sort once, walk numpy group boundaries, run
-    the pure-Python kernels over list slices, and build ONE output
-    frame per batch (round 11: 23.9 s → 1.2 s on the fused silver
-    tail at the 20× lake — 20×, value-identical output)."""
+    """The one plan builder for grouped kernels (``grouped_kernel`` is
+    this with a per-group loop as ``batch_fn``): a repartition on the
+    group key, ``sortWithinPartitions``, then ``mapInPandas``.
+    ``batch_fn`` receives a frame holding MANY complete groups at once
+    (one per Arrow batch, group boundaries guaranteed intact) and
+    returns one output frame (or None). For kernels whose per-group
+    work is tiny — a filing side is ~6-25 rows — the per-group pandas
+    machinery (groupby dispatch, frame slice/copy/concat per group)
+    dominates grouped_kernel's cost; a batch_fn can sort once, walk
+    numpy group boundaries, run the pure-Python kernels over list
+    slices, and build ONE output frame per batch (round 11: 23.9 s →
+    1.2 s on the fused silver tail at the 20× lake — 20×,
+    value-identical output)."""
     group_cols = list(group_cols)
 
     def run(pdf):

@@ -57,9 +57,6 @@ def merge_three_columns(
     prev_pos = F.lag(order_col, 1).over(w)
     # the reference's `indexer > 0` guard: borrowing needs the previous
     # row to exist *and* not be the very first row of the table
-    first_pos = F.first(order_col).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
     borrow_ok = (
         F.col(col1).isNull()
         & F.col(col2).isNull()
@@ -74,7 +71,6 @@ def merge_three_columns(
         .when(borrow_ok, prev_c2)
     )
     emit = n1.isNotNull() | n2.isNotNull() | borrow_ok
-    _ = first_pos  # documented intent; min() used for the guard
     # window expressions must be materialized before the filter (ANSI
     # planner rejects window functions inside WHERE)
     return (

@@ -34,6 +34,8 @@ from pyspark.sql import functions as F
 from x17a5_spark.functions.accounting import relative_error_class
 
 KEY_COLS = ["cik", "name", "filing_date", "fiscal_year"]
+# one structured row per broker-dealer fiscal year (amendments dropped)
+GOLD_KEY = ["cik", "fiscal_year"]
 
 TOTAL_ASSETS = "Total assets"
 TOTAL_LE = "Total liabilities and shareholder's equity"
@@ -105,7 +107,7 @@ def _row_sum_except(labels: list[str], exclude: list[str]):
 def _dedup_keep_first(df: DataFrame) -> DataFrame:
     """W5 — drop amended filings: keep the earliest filing per
     (cik, fiscal_year), explicit order replacing concat order."""
-    w = Window.partitionBy("cik", "fiscal_year").orderBy(
+    w = Window.partitionBy(*GOLD_KEY).orderBy(
         F.col("filing_date").asc(), F.col("name").asc()
     )
     return (

@@ -176,8 +176,9 @@ def run_pipeline(
     """
     import time
 
-    from x17a5_spark.operators.structured import build_structured_assets
+    from x17a5_spark.operators.structured import GOLD_KEY, build_structured_assets
     from x17a5_spark.sources.ocr import OcrSource, StubOcrBackend, quarantine
+    from x17a5_spark.streaming.incremental import incremental_todo
 
     source = OcrSource(backend_factory=ocr_backend_factory or StubOcrBackend)
     LAST_STAGE_SECONDS.clear()
@@ -238,22 +239,26 @@ def run_pipeline(
         )
     _mark("silver_clean")
 
-    # Step 4 (main_p3): structured gold from the asset side.
+    # Step 4 (main_p3): structured gold from the asset side. Gold keeps
+    # one row per GOLD_KEY, so on a re-run a filing whose (cik, fiscal
+    # year) already has a gold row — an amendment the earlier build's
+    # keep-first dedup dropped — stays out, like any other amendment.
+    gold_path = os.path.join(out_dir, "gold_assets")
+
     def gold_stage(todo: DataFrame) -> DataFrame:
-        return build_structured_assets(
+        todo = (
             todo.filter(F.col("side") == "asset")
             .withColumn("name", F.concat(F.lit("N"), F.col("cik")))
             .withColumn(
                 "fiscal_year",
                 (F.substring("filing_date", 1, 4).cast("int") - 1),
-            ),
-            label_map,
-            labels,
+            )
         )
+        if os.path.isdir(gold_path):
+            todo = incremental_todo(todo, spark.read.parquet(gold_path), GOLD_KEY)
+        return build_structured_assets(todo, label_map, labels)
 
     with stage_scope():
-        gold = _incremental_stage(
-            spark, silver, gold_stage, os.path.join(out_dir, "gold_assets")
-        )
+        gold = _incremental_stage(spark, silver, gold_stage, gold_path)
     _mark("gold_build")
     return gold

@@ -35,22 +35,12 @@ _NFP = norm_fp_sql("text")
 N_MINHASH = 16
 N_BANDS = 4  # 4 rows per band
 
-# Shingle width — the PRECISION knob for degenerate vocabularies
-# (SCALE.md round-4: the ~30-word synthetic vocab gives random doc
-# pairs high baseline 3-gram Jaccard, so banding admits ~22 candidates
-# per true pair at the 20x lake). Widening the shingle collapses the
-# random-collision base rate (~vocab^-k) while near-copies keep sharing
-# most shingles, so candidate volume — not the algorithm — shrinks.
-# Env-tunable like d8's X17A5_D8_CELLS, with the ORACLE TRACKING the
-# same k (both the Spark plan and the SQL below derive from it);
-# default 3 keeps every registry hash byte-identical.
-# SCOPE (ADVICE r6): the knob applies to the d3/e7 MinHash chain ONLY.
-# d2_ngram_jaccard — the exact all-pairs validation baseline — pins its
-# own k=3 on both engine and oracle sides, so tuning d3's precision can
-# never silently move the baseline it is validated against.
-import os as _os
-
-D3_SHINGLE_K = int(_os.environ.get("X17A5_D3_SHINGLE", "3"))
+# Shingle width (words per shingle) for d2 and the d3/e7 MinHash
+# chain, on both engine and oracle sides. On a degenerate ~30-word
+# vocabulary (the synthetic lakes) random doc pairs share many
+# 3-grams, so banding admits ~22 candidates per true pair at the 20x
+# lake (SCALE.md round 4); a wider shingle would cut that base rate.
+SHINGLE_K = 3
 # all-empty-signature sentinel for the densified numeric minhash:
 # outside the packed range (mh·16 + d < 2^60, see d3's densification)
 D3_SENTINEL = 1 << 62
@@ -96,18 +86,13 @@ _d3_pack_guard()
 
 # The augmentation convention: perturbed twin ids are original id +
 # AUG_TWIN_OFFSET, which assumes max(doc_id) < AUG_TWIN_OFFSET for
-# every shipped lake (20× tops out at 99,999; t30 carries a
-# raise_error tripwire on the assumption). ONE constant, interpolated
-# into both engines — never a repeated literal (code-review r9).
-#
-# Round 10: the 100× lake (500,000 docs) exceeds the historical
-# 100,000 default — t30's tripwire fired exactly as designed — so the
-# constant is env-parameterized like X17A5_D8_CELLS: the default keeps
-# the registry byte-identical (same plans, same driver rows), and the
-# 100×-scale protocol sets X17A5_AUG_OFFSET=2000000 (copies land at
-# 2M-10M — far inside d15's doc_id < 2^43 packing bound, which fails
-# LOUD if ever exceeded). Every derived offset (e5's copies at 2×/3×,
-# d15's boilerplate copies at 3×) scales with it, and the SQL oracles
+# every lake (guarded_twin_id fails loud otherwise). ONE constant,
+# interpolated into both engines — never a repeated literal. The
+# default 100000 covers the gate lakes and the 20× lake (max id
+# 99,999); the 100× lake (500,000 docs) sets X17A5_AUG_OFFSET=2000000
+# (copies land at 2M-10M, far inside d15's doc_id < 2^43 packing
+# bound). Every derived offset (e5's copies at 2×/3×, d15's
+# boilerplate copies at 3×) scales with it, and the SQL oracles
 # interpolate the same constant, so the hash gate holds at any offset.
 AUG_TWIN_OFFSET = int(os.environ.get("X17A5_AUG_OFFSET", "100000"))
 
@@ -193,23 +178,18 @@ def gram_body_sql(src: str, k: int, alias: str = "shingle") -> str:
         FROM {src})"""
 
 
-def _shingles_sql(k: int = D3_SHINGLE_K) -> str:
-    return f"""
+_SHINGLES_SQL = f"""
 shingles AS (
-{gram_body_sql("aug", k)}
+{gram_body_sql("aug", SHINGLE_K)}
 )
 """
 
 
-_SHINGLES_SQL = _shingles_sql()  # knob-tracking width: d3/e7 chain only
-_D2_SHINGLES_SQL = _shingles_sql(3)  # d2 baseline: pinned, knob-immune
-
-
-def _shingle_table(aug: DataFrame, k: int = D3_SHINGLE_K) -> DataFrame:
+def _shingle_table(aug: DataFrame) -> DataFrame:
     return aug.select(
         "doc_id",
         F.explode(
-            F.array_distinct(word_shingles(F.col("text"), k))
+            F.array_distinct(word_shingles(F.col("text"), SHINGLE_K))
         ).alias("shingle"),
     )
 
@@ -251,7 +231,7 @@ def d2_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         stacklevel=2,
     )
     aug = _augmented_docs(spark, sf_dir)
-    sh = _shingle_table(aug, k=3)
+    sh = _shingle_table(aug)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -274,7 +254,7 @@ def d2_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 D2_SQL = f"""
 WITH {_AUG_SQL.strip()},
-{_D2_SHINGLES_SQL.strip()},
+{_SHINGLES_SQL.strip()},
 sizes AS (SELECT doc_id, count(*) AS n_shingles FROM shingles GROUP BY doc_id),
 common AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common

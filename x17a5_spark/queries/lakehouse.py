@@ -1011,12 +1011,9 @@ FROM binned GROUP BY 1, 2 HAVING count(*) >= 2
 # file lands in the 128 MB–1 GB band: every read-side join runs at most
 # `buckets` tasks wide FOREVER (too few permanently caps join
 # parallelism), while too many produce tiny files per writing task.
-# Env-overridable like the d3/d8 knobs; the stage-table tag folds the
-# value in, so changing it rebuilds rather than reading mismatched
-# buckets.
-import os as _os
-
-J17_BUCKETS = int(_os.environ.get("X17A5_J17_BUCKETS", "8"))
+# The stage-table tag folds the value in, so changing it rebuilds
+# rather than reading mismatched buckets.
+J17_BUCKETS = 8
 
 
 def _j17_tag(sf_dir: str) -> str:

@@ -26,8 +26,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Dimension tables small enough to broadcast at any scale factor the
 # engine targets (region/nation are bounded by geography; supplier only
 # at test SFs — at 100 TB supplier is NOT broadcast, and queries below
